@@ -42,7 +42,7 @@ from graphblast_spark.operators.assign import extract_gather
 from graphblast_spark.runtime.superstep import SuperstepRunner, stable_partitions, truncate_plan
 
 
-def _hook_step(e_sym: DataFrame, parent: DataFrame, scatter_hook: bool) -> DataFrame:
+def _hook_step(e_sym: DataFrame, parent: DataFrame) -> DataFrame:
     """One FastSV hook superstep over the persisted symmetric edges.
 
     (1a) min neighbor parent (cc.hpp:78 MinimumSelectSecond vxm);
@@ -65,10 +65,6 @@ def _hook_step(e_sym: DataFrame, parent: DataFrame, scatter_hook: bool) -> DataF
     Catalyst evaluate the |E|-row hook join TWICE per superstep
     (measured 9.9 s vs 6.9 s on the sf0.1 cc slot; plan-pinned in
     tests/test_plans.py test_cc_hook_step_single_edge_scan).
-    ``scatter_hook=False`` is the pre-FastSV hash-min shape: one fewer
-    agg per superstep, but O(diameter) on flattened-star merges — the
-    caller's convergence guard turns that into an error, never a
-    silent wrong answer.
     """
     p = parent.hint("shuffle_hash")
     nbr_min = (
@@ -78,8 +74,6 @@ def _hook_step(e_sym: DataFrame, parent: DataFrame, scatter_hook: bool) -> DataF
     )
     j = parent.join(nbr_min, on="id", how="left")
     hv = F.least(F.col("val"), F.coalesce(F.col("nmin"), F.col("val")))
-    if not scatter_hook:
-        return j.select("id", hv.alias("val"))
     return (
         j.select(
             F.explode(
@@ -99,9 +93,7 @@ def connected_components(
     g: Graph,
     desc: Descriptor = DEFAULT_DESC,
     runner: SuperstepRunner | None = None,
-    pointer_jump: bool = True,
     init_labels: DataFrame | None = None,
-    scatter_hook: bool = True,
 ) -> DataFrame:
     """Returns (id long, component long) with component = min id of the
     connected component (treating edges as undirected).
@@ -152,10 +144,9 @@ def connected_components(
     with stable_partitions(spark):
         for it in range(start_iter, desc.max_niter):
             t0 = time.time()
-            hooked = _hook_step(e_sym, parent, scatter_hook)
+            hooked = _hook_step(e_sym, parent)
             # (2) shortcut/jump: f[u] = f[f[u]] (cc.hpp:98-99 extractGather)
-            new_parent = extract_gather(hooked, hooked) if pointer_jump else hooked
-            new_parent = new_parent.transform(truncate_plan)
+            new_parent = extract_gather(hooked, hooked).transform(truncate_plan)
 
             # (3) convergence (cc.hpp:102-104 MinimumNotEqualTo reduce).
             # Labels are integers and strictly monotone non-increasing, so

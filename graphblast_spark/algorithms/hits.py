@@ -3,9 +3,9 @@
 Beyond the reference's algorithm set, but the other canonical web
 link-analysis algorithm next to PageRank (Kleinberg 1999), and a pure
 composition of the engine's existing verbs: each half-step is one
-vecmat (authority pulls over in-links, hub pulls over out-links), so
-the physical plan per iteration is two of the PageRank join+agg
-shapes over the same persisted edge table — nothing new to tune.
+``dense_pull`` (authority pulls over in-links, hub pulls over
+out-links), so the physical plan per iteration is two of the PageRank
+join+agg shapes over the same edge table — nothing new to tune.
 
 Semantics (deterministic, oracle-replayable):
 
@@ -22,13 +22,12 @@ output over the full vertex universe.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphblast_spark.algorithms.salsa import hub_authority_loop
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, stable_partitions, truncate_plan
+from graphblast_spark.runtime.superstep import SuperstepRunner
 
 
 def hits(
@@ -37,56 +36,12 @@ def hits(
     runner: SuperstepRunner | None = None,
 ) -> DataFrame:
     """Returns (id long, hub double, authority double) after
-    ``fixed_iters`` dual half-steps with L1 normalization."""
-    spark = g.edges.sparkSession
-    if runner is None:
-        runner = SuperstepRunner(spark)
-    n = g.n
-
-    edges = g.edges.select("src", "dst")
-    zeros = g.vertices.select("id", F.lit(0.0).alias("z"))
+    ``fixed_iters`` dual half-steps with L1 normalization — SALSA's
+    loop (salsa.py) with unit weights on both orientations."""
+    unit = g.edges.select("src", "dst", F.lit(1.0).alias("w"))
 
     def init():
-        u0 = g.vertices.select("id", F.lit(1.0 / n).alias("val"))
+        u0 = g.vertices.select("id", F.lit(1.0 / g.n).alias("val"))
         return {"hub": u0, "authority": u0}
 
-    state, start_iter, _ = runner.resume_or_init(init)
-    hub, authority = state["hub"], state["authority"]
-
-    def _pull(vec: DataFrame, in_key: str, out_key: str) -> DataFrame:
-        """One vecmat half-step + density restore (union-before-agg,
-        one shuffle — the pagerank.py pattern)."""
-        v = vec.hint("shuffle_hash")
-        contribs = edges.join(v, on=edges[in_key] == v["id"], how="inner").select(
-            edges[out_key].alias("id"), F.col("val").alias("c")
-        )
-        return (
-            contribs.unionByName(zeros.select("id", F.col("z").alias("c")))
-            .groupBy("id")
-            .agg(F.sum("c").alias("val"))
-        )
-
-    def _l1_normalize(vec: DataFrame) -> DataFrame:
-        total = vec.agg(F.sum("val")).first()[0] or 1.0
-        return vec.select("id", (F.col("val") / F.lit(float(total))).alias("val"))
-
-    with stable_partitions(spark):
-        for it in range(start_iter, fixed_iters):
-            t0 = time.time()
-            authority = _l1_normalize(_pull(hub, "src", "dst")).transform(truncate_plan)
-            hub = _l1_normalize(_pull(authority, "dst", "src")).transform(truncate_plan)
-            state = runner.commit(
-                it, {"hub": hub, "authority": authority},
-                metrics={"ms": (time.time() - t0) * 1000.0},
-            )
-            hub, authority = state["hub"], state["authority"]
-
-    return (
-        hub.withColumnRenamed("val", "hub")
-        .join(authority.withColumnRenamed("val", "authority"), on="id", how="outer")
-        .select(
-            "id",
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
-            F.coalesce("authority", F.lit(0.0)).alias("authority"),
-        )
-    )
+    return hub_authority_loop(g, unit, unit, init, fixed_iters, runner)

@@ -4,9 +4,9 @@ Beyond the reference's algorithm set but the third canonical link-
 analysis ranker next to PageRank and HITS (Katz 1953; the alpha-
 attenuated walk-count family PageRank generalizes): it completes the
 engine's web-ranking tier and is a pure composition of existing verbs
-— each iteration is ONE vecmat-shaped join+agg over the persisted
-edge table (the pagerank.py physical plan) plus an affine map that
-Catalyst fuses into the aggregate's projection.
+— each iteration is ONE ``dense_pull`` (operators/vecmat.py, the
+pagerank.py physical plan) over the edge table plus an affine map
+that Catalyst fuses into the aggregate's projection.
 
 Semantics (deterministic, fixed-iteration, oracle-replayable):
 
@@ -35,11 +35,42 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.matrix import Graph
+from graphblast_spark.operators.vecmat import dense_pull
 from graphblast_spark.runtime.superstep import (
     SuperstepRunner,
     stable_partitions,
     truncate_plan,
 )
+
+
+def _power_iterate(
+    g: Graph, x0: float, finish, fixed_iters: int, runner: SuperstepRunner | None
+) -> DataFrame:
+    """x ← finish(Aᵀx) for ``fixed_iters`` supersteps from the constant
+    vector ``x0`` — the loop Katz and eigenvector centrality share.
+    Aᵀx is the unit-weight dense pull (one row per vertex; vertices
+    with no in-links pull 0); ``finish`` maps it to the next state and
+    truncates its plan. Checkpointed and resumed through ``runner``."""
+    spark = g.edges.sparkSession
+    if runner is None:
+        runner = SuperstepRunner(spark)
+    edges = g.edges.select("src", "dst", F.lit(1.0).alias("w"))
+    zeros = g.vertices.select("id", F.lit(0.0).alias("c"))
+
+    def init():
+        return {"x": g.vertices.select("id", F.lit(x0).alias("val"))}
+
+    state, start_iter, _ = runner.resume_or_init(init)
+    x = state["x"]
+    with stable_partitions(spark):
+        for it in range(start_iter, fixed_iters):
+            t0 = time.time()
+            state = runner.commit(
+                it, {"x": finish(dense_pull(edges, x, zeros))},
+                metrics={"ms": (time.time() - t0) * 1000.0},
+            )
+            x = state["x"]
+    return x
 
 
 def katz_centrality(
@@ -60,42 +91,14 @@ def katz_centrality(
     """
     if not (0.0 < alpha < 1.0):
         raise ValueError(f"katz alpha must be in (0, 1); got {alpha!r}")
-    spark = g.edges.sparkSession
-    if runner is None:
-        runner = SuperstepRunner(spark)
 
-    edges = g.edges.select("src", "dst")
-    verts = g.vertices.select("id")
+    def finish(y: DataFrame) -> DataFrame:
+        # the affine map fuses into the aggregate's projection
+        return y.select(
+            "id", (F.lit(float(beta)) + F.lit(float(alpha)) * F.col("val")).alias("val")
+        ).transform(truncate_plan)
 
-    def init():
-        return {"x": verts.select("id", F.lit(float(beta)).alias("val"))}
-
-    state, start_iter, _ = runner.resume_or_init(init)
-    x = state["x"]
-
-    with stable_partitions(spark):
-        for it in range(start_iter, fixed_iters):
-            t0 = time.time()
-            v = x.hint("shuffle_hash")
-            contribs = edges.join(v, on=edges["src"] == v["id"], how="inner").select(
-                F.col("dst").alias("id"), F.col("val").alias("c")
-            )
-            # Union-before-agg density restore (pagerank.py pattern):
-            # vertices with no in-links surface with c=0 in the same
-            # single shuffle, so the affine map below stays dense.
-            x = (
-                contribs.unionByName(verts.select("id", F.lit(0.0).alias("c")))
-                .groupBy("id")
-                .agg(
-                    (F.lit(float(beta)) + F.lit(float(alpha)) * F.sum("c")).alias("val")
-                )
-                .transform(truncate_plan)
-            )
-            state = runner.commit(
-                it, {"x": x}, metrics={"ms": (time.time() - t0) * 1000.0}
-            )
-            x = state["x"]
-
+    x = _power_iterate(g, float(beta), finish, fixed_iters, runner)
     return x.select("id", F.col("val").alias("katz"))
 
 
@@ -118,52 +121,26 @@ def eigenvector_centrality(
     normalization guard keeps it at exact zeros instead of NaN, which
     is also the fixpoint the infinite series converges to there.
 
-    Scale: per step ONE shuffle — the vecmat join on src + agg on dst
-    with map-side partial sums absorbing hub fan-in (pagerank.py
+    Scale: per step ONE shuffle — the dense pull join on src + agg on
+    dst with map-side partial sums absorbing hub fan-in (pagerank.py
     plan), plus a single-row L2-norm aggregate broadcast back onto the
     result (BroadcastNestedLoopJoin of one row; no second shuffle of
     the vertex table).
     """
-    spark = g.edges.sparkSession
-    if runner is None:
-        runner = SuperstepRunner(spark)
 
-    edges = g.edges.select("src", "dst")
-    verts = g.vertices.select("id")
+    def finish(y: DataFrame) -> DataFrame:
+        # truncate the un-normalized vector BEFORE the norm: both the
+        # 1-row norm aggregate and the normalization read y, and
+        # without materialization each would re-execute the |E|-row
+        # join+agg (ReuseExchange is best-effort under AQE)
+        y = y.transform(truncate_plan)
+        nrm = y.agg(F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("nrm"))
+        return y.crossJoin(F.broadcast(nrm)).select(
+            "id",
+            F.when(F.col("nrm") > 0.0, F.col("val") / F.col("nrm"))
+            .otherwise(F.lit(0.0))
+            .alias("val"),
+        )
 
-    def init():
-        return {"x": verts.select("id", F.lit(1.0).alias("val"))}
-
-    state, start_iter, _ = runner.resume_or_init(init)
-    x = state["x"]
-
-    with stable_partitions(spark):
-        for it in range(start_iter, fixed_iters):
-            t0 = time.time()
-            v = x.hint("shuffle_hash")
-            contribs = edges.join(v, on=edges["src"] == v["id"], how="inner").select(
-                F.col("dst").alias("id"), F.col("val").alias("c")
-            )
-            # truncate the un-normalized vector BEFORE the norm: both
-            # the 1-row norm aggregate and the normalization read y, and
-            # without materialization each would re-execute the |E|-row
-            # join+agg (ReuseExchange is best-effort under AQE)
-            y = (
-                contribs.unionByName(verts.select("id", F.lit(0.0).alias("c")))
-                .groupBy("id")
-                .agg(F.sum("c").alias("val"))
-                .transform(truncate_plan)
-            )
-            nrm = y.agg(F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("nrm"))
-            x = y.crossJoin(F.broadcast(nrm)).select(
-                "id",
-                F.when(F.col("nrm") > 0.0, F.col("val") / F.col("nrm"))
-                .otherwise(F.lit(0.0))
-                .alias("val"),
-            )
-            state = runner.commit(
-                it, {"x": x}, metrics={"ms": (time.time() - t0) * 1000.0}
-            )
-            x = state["x"]
-
+    x = _power_iterate(g, 1.0, finish, fixed_iters, runner)
     return x.select("id", F.col("val").alias("eigen"))

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
+from graphblast_spark.operators.vecmat import dense_pull
 from graphblast_spark.runtime.superstep import (
     SuperstepRunner,
     child_runner,
@@ -98,49 +99,65 @@ def pagerank(
     start converges in a few supersteps instead of tens (the
     incremental-analytics path). Ignored when a checkpoint resume is
     in progress (the checkpointed state wins)."""
-    spark = g.edges.sparkSession
     n = g.n
-    teleport = (1.0 - alpha) / n
-
     caller_prep = w_edges is not None
     if w_edges is None:
         w_edges = pagerank_prep(g, alpha, weighted=weighted)
-
-    zeros = g.vertices.select("id", F.lit(0.0).alias("c"))
-
-    if runner is None:
-        runner = SuperstepRunner(spark)
 
     def init():
         if init_ranks is not None:
             return {"ranks": init_ranks.select("id", F.col("val").cast("double"))}
         return {"ranks": g.vertices.select("id", F.lit(1.0 / n).alias("val"))}
 
+    ranks = _power_loop(
+        g, w_edges,
+        base=g.vertices.select("id", F.lit(0.0).alias("c")),
+        init=init,
+        runner=runner,
+        niter=fixed_iters if fixed_iters is not None else desc.max_niter,
+        eps=eps if fixed_iters is None else None,
+        teleport=(1.0 - alpha) / n,
+    )
+    if not caller_prep:
+        w_edges.unpersist()
+    return ranks
+
+
+def _power_loop(
+    g: Graph,
+    w_edges: DataFrame,
+    base: DataFrame,
+    init,
+    runner: SuperstepRunner | None,
+    niter: int,
+    eps: float | None,
+    teleport: float | None,
+) -> DataFrame:
+    """The superstep loop PageRank and personalized PageRank share:
+    ranks ← [teleport +] Σ (w·ranks ∪ base) for ``niter`` supersteps,
+    stopping early once Σ(Δp)² < ``eps`` when ``eps`` is given (the
+    one scalar action per superstep; None skips it — the fixed-count
+    contract mode). ``base(id, c)`` carries the dense-restore zeros
+    and, for PPR, the seed teleport; a uniform ``teleport`` is added
+    after the aggregate so PageRank keeps its ``teleport + Σc`` form.
+    State is checkpointed and resumed through ``runner``."""
+    spark = g.edges.sparkSession
+    if runner is None:
+        runner = SuperstepRunner(spark)
     state, start_iter, _ = runner.resume_or_init(init)
     ranks = state["ranks"]
 
-    niter = fixed_iters if fixed_iters is not None else desc.max_niter
     with stable_partitions(spark):
         for it in range(start_iter, niter):
             t0 = time.time()
-            # shuffle-hash hint: probe the persisted src-partitioned edge
-            # table, build the hash table from ranks — avoids re-sorting |E|
-            # rows per superstep (sort-merge), measured 1.6× faster at 16M
-            # edges / local[32].
-            r = ranks.hint("shuffle_hash")
-            contribs = (
-                w_edges.join(r, on=w_edges["src"] == r["id"], how="inner")
-                .select(w_edges["dst"].alias("id"), (F.col("w") * r["val"]).alias("c"))
-            )
-            new_ranks = (
-                contribs.unionByName(zeros)
-                .groupBy("id")
-                .agg((F.lit(teleport) + F.sum("c")).alias("val"))
-            )
+            new_ranks = dense_pull(w_edges, ranks, base)
+            if teleport is not None:
+                new_ranks = new_ranks.select(
+                    "id", (F.lit(teleport) + F.col("val")).alias("val"))
             new_ranks = new_ranks.transform(truncate_plan)  # superstep action
 
             err = None
-            if fixed_iters is None:
+            if eps is not None:
                 err = (
                     new_ranks.join(ranks, on="id")
                     .agg(F.sum(F.pow(new_ranks["val"] - ranks["val"], 2)).alias("e"))
@@ -151,14 +168,11 @@ def pagerank(
                 it,
                 {"ranks": new_ranks},
                 scalars={"err": err},
-                metrics={"ms": ms, "err_over_n": (err / n) if err is not None else None},
+                metrics={"ms": ms, "err_over_n": (err / g.n) if err is not None else None},
             )
             ranks = state["ranks"]
             if err is not None and err < eps:
                 break
-
-    if not caller_prep:
-        w_edges.unpersist()
     return ranks
 
 
@@ -173,12 +187,13 @@ def personalized_pagerank(
 ) -> DataFrame:
     """Personalized PageRank: the teleport mass (1-α) lands uniformly on
     the seed set S instead of all vertices; init = 1/|S| on S, 0
-    elsewhere. Same superstep plan as :func:`pagerank` (persisted
+    elsewhere. Runs :func:`pagerank`'s superstep loop (persisted
     src-partitioned weighted edges, shuffle-hash probe, union-before-agg
-    density restore, one eager localCheckpoint per iteration) — only the
-    teleport vector changes: a per-vertex base table rides the same
-    pre-aggregate union the dense-restore zeros use, so PPR costs
-    exactly what PR costs per superstep.
+    density restore, one eager localCheckpoint per iteration, durable
+    checkpoint resume through ``runner``) — only the teleport vector
+    changes: a per-vertex base table rides the same pre-aggregate union
+    the dense-restore zeros use, so PPR costs exactly what PR costs per
+    superstep.
 
     Returns (id long, val double) dense over all vertices."""
     spark = g.edges.sparkSession
@@ -202,8 +217,6 @@ def personalized_pagerank(
     caller_prep = w_edges is not None
     if w_edges is None:
         w_edges = pagerank_prep(g, alpha, weighted=weighted)
-    if runner is None:
-        runner = SuperstepRunner(spark)
 
     tele = (1.0 - alpha) / n_seeds
     # base = teleport on seeds + explicit zero per vertex (density)
@@ -213,28 +226,16 @@ def personalized_pagerank(
         .unionByName(g.vertices.select("id", F.lit(0.0).alias("c")))
         .transform(truncate_plan)
     )
-    ranks = (
-        g.vertices.join(seeds.withColumn("__s", F.lit(1)), on="id", how="left")
-        .select("id", F.when(F.col("__s").isNotNull(), 1.0 / n_seeds)
-                .otherwise(0.0).alias("val"))
-    )
 
-    with stable_partitions(spark):
-        for it in range(fixed_iters):
-            t0 = time.time()
-            r = ranks.hint("shuffle_hash")
-            contribs = (
-                w_edges.join(r, on=w_edges["src"] == r["id"], how="inner")
-                .select(w_edges["dst"].alias("id"), (F.col("w") * r["val"]).alias("c"))
-            )
-            ranks = (
-                contribs.unionByName(base)
-                .groupBy("id")
-                .agg(F.sum("c").alias("val"))
-                .transform(truncate_plan)  # superstep action
-            )
-            runner.commit(it, {}, metrics={"ms": (time.time() - t0) * 1000.0})
+    def init():
+        return {"ranks": (
+            g.vertices.join(seeds.withColumn("__s", F.lit(1)), on="id", how="left")
+            .select("id", F.when(F.col("__s").isNotNull(), 1.0 / n_seeds)
+                    .otherwise(0.0).alias("val"))
+        )}
 
+    ranks = _power_loop(g, w_edges, base, init, runner, fixed_iters,
+                        eps=None, teleport=None)
     if not caller_prep:
         w_edges.unpersist()
     return ranks

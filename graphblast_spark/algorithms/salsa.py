@@ -19,8 +19,8 @@ Semantics (deterministic, oracle-replayable — hits.py's posture):
 The degree divisions are folded into TWO weighted edge tables built
 once before the loop (w_fwd = 1/outdeg(src), w_bwd = 1/indeg(dst)) so
 the physical plan per iteration is exactly two PageRank-shaped
-join+agg supersteps over persisted pinned edges — nothing new to tune,
-and the auto-salting / shuffle-hash posture of vecmat carries over.
+``dense_pull`` supersteps (operators/vecmat.py) over persisted edges
+— nothing new to tune.
 The L1 normalization per half-step makes the fixed-iteration state
 deterministic (SALSA's stationary vector is only defined per connected
 component; the power-iteration form with explicit normalization is the
@@ -38,7 +38,59 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.matrix import Graph
+from graphblast_spark.operators.vecmat import dense_pull
 from graphblast_spark.runtime.superstep import SuperstepRunner, stable_partitions, truncate_plan
+
+
+def hub_authority_loop(
+    g: Graph,
+    ew_fwd: DataFrame,
+    ew_bwd: DataFrame,
+    init,
+    fixed_iters: int,
+    runner: SuperstepRunner | None,
+) -> DataFrame:
+    """The dual power loop SALSA and HITS (hits.py) share: per
+    superstep authority pulls hub along ``ew_fwd`` (src → dst), hub
+    pulls the new authority back along ``ew_bwd`` (dst → src), each
+    L1-normalized; ``init`` returns the starting ``{"hub",
+    "authority"}`` vectors. Both edge tables are (src, dst, w) — SALSA
+    passes its degree-normalized pair, HITS unit weights on both.
+    Returns (id long, hub double, authority double)."""
+    spark = g.edges.sparkSession
+    if runner is None:
+        runner = SuperstepRunner(spark)
+    zeros = g.vertices.select("id", F.lit(0.0).alias("c"))
+
+    state, start_iter, _ = runner.resume_or_init(init)
+    hub, authority = state["hub"], state["authority"]
+
+    def _l1_normalize(vec: DataFrame) -> DataFrame:
+        total = vec.agg(F.sum("val")).first()[0] or 1.0
+        return vec.select("id", (F.col("val") / F.lit(float(total))).alias("val"))
+
+    with stable_partitions(spark):
+        for it in range(start_iter, fixed_iters):
+            t0 = time.time()
+            authority = _l1_normalize(dense_pull(ew_fwd, hub, zeros)).transform(truncate_plan)
+            hub = _l1_normalize(
+                dense_pull(ew_bwd, authority, zeros, in_key="dst", out_key="src")
+            ).transform(truncate_plan)
+            state = runner.commit(
+                it, {"hub": hub, "authority": authority},
+                metrics={"ms": (time.time() - t0) * 1000.0},
+            )
+            hub, authority = state["hub"], state["authority"]
+
+    return (
+        hub.withColumnRenamed("val", "hub")
+        .join(authority.withColumnRenamed("val", "authority"), on="id", how="outer")
+        .select(
+            "id",
+            F.coalesce("hub", F.lit(0.0)).alias("hub"),
+            F.coalesce("authority", F.lit(0.0)).alias("authority"),
+        )
+    )
 
 
 def salsa(
@@ -58,9 +110,6 @@ def salsa(
     neighborhood rather than globally — mass diffuses outward through
     the stochastic half-steps exactly like the global variant, and the
     L1 normalization keeps the fixed-iteration state deterministic."""
-    spark = g.edges.sparkSession
-    if runner is None:
-        runner = SuperstepRunner(spark)
     n = g.n
 
     e = g.edges.select("src", "dst")
@@ -74,7 +123,6 @@ def salsa(
         "src", "dst", (F.lit(1.0) / F.col("d")).alias("w")
     ).persist()
     ew_fwd.count(), ew_bwd.count()
-    zeros = g.vertices.select("id", F.lit(0.0).alias("z"))
 
     def init():
         if seeds is None:
@@ -89,45 +137,6 @@ def salsa(
             ).select("id", F.coalesce("s", F.lit(0.0)).alias("val"))
         return {"hub": u0, "authority": u0}
 
-    state, start_iter, _ = runner.resume_or_init(init)
-    hub, authority = state["hub"], state["authority"]
-
-    def _pull(edges: DataFrame, vec: DataFrame, in_key: str, out_key: str) -> DataFrame:
-        """One weighted vecmat half-step + density restore (union-
-        before-agg, one shuffle — the pagerank.py pattern)."""
-        v = vec.hint("shuffle_hash")
-        contribs = edges.join(v, on=edges[in_key] == v["id"], how="inner").select(
-            edges[out_key].alias("id"), (F.col("w") * F.col("val")).alias("c")
-        )
-        return (
-            contribs.unionByName(zeros.select("id", F.col("z").alias("c")))
-            .groupBy("id")
-            .agg(F.sum("c").alias("val"))
-        )
-
-    def _l1_normalize(vec: DataFrame) -> DataFrame:
-        total = vec.agg(F.sum("val")).first()[0] or 1.0
-        return vec.select("id", (F.col("val") / F.lit(float(total))).alias("val"))
-
-    with stable_partitions(spark):
-        for it in range(start_iter, fixed_iters):
-            t0 = time.time()
-            authority = _l1_normalize(_pull(ew_fwd, hub, "src", "dst")).transform(truncate_plan)
-            hub = _l1_normalize(_pull(ew_bwd, authority, "dst", "src")).transform(truncate_plan)
-            state = runner.commit(
-                it, {"hub": hub, "authority": authority},
-                metrics={"ms": (time.time() - t0) * 1000.0},
-            )
-            hub, authority = state["hub"], state["authority"]
-
-    out = (
-        hub.withColumnRenamed("val", "hub")
-        .join(authority.withColumnRenamed("val", "authority"), on="id", how="outer")
-        .select(
-            "id",
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
-            F.coalesce("authority", F.lit(0.0)).alias("authority"),
-        )
-    )
+    out = hub_authority_loop(g, ew_fwd, ew_bwd, init, fixed_iters, runner)
     ew_fwd.unpersist(), ew_bwd.unpersist()
     return out

@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from graphblast_spark.matrix import Graph
 from graphblast_spark.runtime.superstep import (
     SuperstepRunner,
-    scaled_shuffle,
+    scaled_partition_count,
     stable_partitions,
     truncate_plan,
 )
@@ -160,15 +160,16 @@ def strongly_connected_components(
     strongly connected component."""
     spark = g.edges.sparkSession
     n_edges = g.edges.count()
-    with scaled_shuffle(spark, n_edges) as n_part:
+    n_part = scaled_partition_count(spark, n_edges)
+    with stable_partitions(spark, n_part):
         # One pinned orientation: both colorings probe the persisted
         # src-partitioned edges (the backward pass flips the JOIN key,
         # not the layout); per-round activity is a semi-join filter.
-        # Partition width is clamped to the edge count (scaled_shuffle)
-        # so the ~30 supersteps per outer round don't schedule hundreds
-        # of near-empty tasks each on small remainders; every loop
-        # shuffle below runs at the same width, keeping the persisted
-        # edges co-partitioned with the state.
+        # Partition width is clamped to the edge count
+        # (scaled_partition_count) so the ~30 supersteps per outer round
+        # don't schedule hundreds of near-empty tasks each on small
+        # remainders; every loop shuffle below runs at the same width,
+        # keeping the persisted edges co-partitioned with the state.
         e_fwd = g.edges.select("src", "dst").repartition(n_part, "src").persist()
         e_fwd.count()
         return _scc_loop(g, spark, e_fwd, runner, max_rounds, max_inner)

@@ -86,8 +86,8 @@ def canon_column(s):
             fv = float(v)
             out.append("nan" if math.isnan(fv) else repr(fv))
         return out, None
-    if kind == "int":
-        return [str(int(v)) for v in s], None
+    if kind == "int":  # nullable Int64 columns may hold pd.NA
+        return ["∅" if pd.isna(v) else str(int(v)) for v in s], None
     if kind == "bool":
         return [str(bool(v)) for v in s], None
     for v in s:  # object/str column: every cell must be a plain string or null

@@ -46,10 +46,6 @@ class Descriptor:
     # hubs above it get a two-phase salted reduce (see vecmat._vecmat).
     salt_budget: int = 1 << 24
 
-    # Superstep runtime
-    checkpoint_every: int = 0      # 0 = localCheckpoint only, no durable ckpt
-    checkpoint_dir: str | None = None
-
     def with_(self, **kw) -> "Descriptor":
         return replace(self, **kw)
 

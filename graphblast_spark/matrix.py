@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 EDGE_SCHEMA = "src long, dst long, val double"
@@ -180,21 +180,6 @@ class Graph:
     def unpersist(self) -> None:
         for df in self._cached:
             df.unpersist()
-
-    # -- durable store (reference binary .dat cache analog) ------------
-    def save(self, name: str, path: str | None = None, buckets: int | None = None) -> None:
-        """Persist as bucketed catalog tables so later *jobs* reload the
-        layout shuffle-free (sources/store.py; the analog of the
-        reference's binary cache, sparse_matrix.hpp:328-345)."""
-        from graphblast_spark.sources.store import save_graph
-
-        save_graph(self, name, path=path, buckets=buckets)
-
-    @staticmethod
-    def load(spark: SparkSession, name: str) -> "Graph":
-        from graphblast_spark.sources.store import load_graph
-
-        return load_graph(spark, name)
 
 
 def dense_vector(g: Graph, value=0.0, colname: str = "val") -> DataFrame:

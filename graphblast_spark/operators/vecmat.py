@@ -178,6 +178,38 @@ def mxv(
                    vec_first=False, salt=salt, accum=accum, w=w)
 
 
+def dense_pull(
+    edges: DataFrame,
+    u: DataFrame,
+    base: DataFrame,
+    in_key: str = "src",
+    out_key: str = "dst",
+) -> DataFrame:
+    """The dense pull SpMV step of the centrality tier (PageRank, PPR,
+    Katz, eigenvector, HITS, SALSA): ``(id, val = Σ w·u.val)`` over a
+    pre-weighted ``edges(src, dst, w)`` table, pulling ``u`` along
+    ``in_key → out_key``.
+
+    ``base(id, c)`` is unioned in before the one aggregate: one zero
+    row per vertex keeps the output dense (every vertex gets a row in
+    the same single shuffle, instead of a second outer join), and a
+    caller may add per-vertex constants there (PPR's seed teleport).
+    Unweighted callers project ``F.lit(1.0).alias("w")`` — ``1.0*x``
+    is IEEE-exact.
+
+    Unlike :func:`vxm` this is the plain PlusMultiplies pull with no
+    mask, salting or direction choice, so it never scans for degree
+    stats. The ``shuffle_hash`` hint probes the (persisted,
+    ``in_key``-partitioned) edge table and builds the hash table from
+    the vector side — sort-merge would re-sort |E| rows per superstep
+    (measured 1.6× slower at 16M edges / local[32])."""
+    v = u.hint("shuffle_hash")
+    contribs = edges.join(v, on=edges[in_key] == v["id"], how="inner").select(
+        edges[out_key].alias("id"), (edges["w"] * v["val"]).alias("c")
+    )
+    return contribs.unionByName(base).groupBy("id").agg(F.sum("c").alias("val"))
+
+
 def apply_vxm(
     u: DataFrame,
     g: Graph,

@@ -79,10 +79,13 @@ def truncate_plan(df: DataFrame) -> DataFrame:
         return ck
 
 
-@contextmanager
-def scaled_shuffle(spark: SparkSession, n_rows: int, rows_per_partition: int = 150_000):
-    """Clamp ``spark.sql.shuffle.partitions`` to the superstep state's
-    actual size for the duration of an iterative loop, then restore.
+def scaled_partition_count(
+    spark: SparkSession, n_rows: int, rows_per_partition: int = 150_000
+) -> int:
+    """Partition width for a superstep loop over ``n_rows`` rows of
+    state/edges: one partition per ``rows_per_partition`` rows, clamped
+    to [4, session default]; pin it with ``stable_partitions(spark,
+    width)``.
 
     Superstep loops inherit the session's shuffle width, which is sized
     for the BATCH queries' data volume. When the loop state is small
@@ -94,25 +97,9 @@ def scaled_shuffle(spark: SparkSession, n_rows: int, rows_per_partition: int = 1
     ~2 s at 4 partitions. At scale the clamp is a no-op: one partition
     per ``rows_per_partition`` rows reaches the session default long
     before real cluster inputs (10^9+ rows), so batch-sized widths are
-    preserved exactly when they matter. Keeps every downstream join
-    co-partitioned because the loop's persisted inputs are built under
-    the same width."""
-    key = "spark.sql.shuffle.partitions"
-    old = int(spark.conf.get(key))
-    target = max(4, min(old, -(-int(n_rows) // rows_per_partition)))
-    spark.conf.set(key, str(target))
-    try:
-        yield target
-    finally:
-        spark.conf.set(key, str(old))
-
-
-def scaled_partition_count(
-    spark: SparkSession, n_rows: int, rows_per_partition: int = 150_000
-) -> int:
-    """Partition width for a superstep loop over ``n_rows`` rows of
-    state/edges: one partition per ``rows_per_partition`` rows, clamped
-    to [4, session default] — see :func:`scaled_shuffle` for why."""
+    preserved exactly when they matter. Build the loop's persisted
+    inputs under the same width so every downstream join stays
+    co-partitioned."""
     default = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(4, min(default, -(-int(n_rows) // rows_per_partition)))
 

@@ -39,17 +39,6 @@ def _decode(html: pd.Series) -> pd.Series:
     return html.str.decode("utf-8", errors="replace").fillna("")
 
 
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """html binary → text string (byte-identical per url invariant).
-    Vectorized: bytes decode + regex extract via pandas .str."""
-    return _decode(html).str.extract(_TEXT_RE, expand=False).fillna("")
-
-
-def extract_outlinks_udf(html: pd.Series) -> pd.Series:
-    """html binary → list<string> of outlink urls. Vectorized findall."""
-    return _decode(html).str.findall(_HREF_RE)
-
-
 def extract_columns(pages: DataFrame) -> DataFrame:
     """pages → (url, text_extracted, outlinks array<string>, lang).
     One decode pass feeds both regexes (decoding dominates for short

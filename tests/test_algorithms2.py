@@ -261,6 +261,22 @@ def test_personalized_pagerank_allclose(spark, name):
     assert vec[0] > 1.0 / n
 
 
+def test_personalized_pagerank_all_seeds_is_pagerank(spark):
+    """With every vertex a seed, PPR teleports (1-α)/n everywhere from
+    a 1/n start — plain PageRank, superstep for superstep. Pins the
+    power loop the two share."""
+    from graphblast_spark.algorithms import pagerank, personalized_pagerank
+
+    g = fixture_graph(spark, "chesapeake")
+    k = 7
+    ppr = {r["id"]: r["val"] for r in personalized_pagerank(g, list(range(g.n)), fixed_iters=k).collect()}
+    pr = {r["id"]: r["val"] for r in pagerank(g, fixed_iters=k).collect()}
+    ids = range(g.n)
+    assert sorted(ppr) == sorted(pr) == list(ids)
+    assert np.allclose([ppr[i] for i in ids], [pr[i] for i in ids], rtol=1e-12, atol=0.0)
+    g.unpersist()
+
+
 def test_ppr_seed_sanitization(spark):
     """Duplicate seeds must not double-count teleport mass; seeds outside
     the vertex domain must raise instead of silently skewing scores."""

@@ -102,3 +102,10 @@ def test_null_handling_consistent_across_kinds():
     obj = pd.Series([None, "a"], dtype="object")
     strs, bad = canon_column(obj)
     assert bad is None and strs == ["∅", "a"]
+
+
+def test_nullable_int_null_canons_to_empty_set_marker():
+    s = pd.Series([7, pd.NA, -1], dtype="Int64")
+    assert dtype_kind(s) == "int"
+    strs, bad = canon_column(s)
+    assert bad is None and strs == ["7", "∅", "-1"]

@@ -91,6 +91,35 @@ def test_vecmat_single_aggregation_exchange_budget(spark):
     assert count_exchanges(out) <= 3, count_exchanges(out)
 
 
+def test_dense_pull_single_edge_scan_exchange_budget(spark):
+    """The centrality tier's shared dense pull step (PageRank, PPR,
+    Katz, eigenvector, HITS, SALSA) in both orientations: shuffle-hash,
+    never sort-merge; the edge table scanned ONCE; at most 3 shuffles
+    (edge side, vector side, group key). Bare uncached frames, as in
+    the vecmat budget test above."""
+    import re
+
+    from graphblast_spark.operators.vecmat import dense_pull
+    from graphblast_spark.plans.audit import _physical
+
+    edges = spark.range(200).select(
+        (F.col("id") % 20).alias("src"), (F.col("id") % 31).alias("dst"),
+        F.lit(0.5).alias("w"))
+    vertices = spark.range(31).select("id")
+    u = vertices.select("id", F.lit(1.0).alias("val"))
+    base = vertices.select("id", F.lit(0.0).alias("c"))
+    for in_key, out_key in (("src", "dst"), ("dst", "src")):
+        out = dense_pull(edges, u, base, in_key=in_key, out_key=out_key)
+        rows = out.collect()
+        # dense over every vertex; Σ val = Σ w over the edges
+        assert len(rows) == 31 and sum(r["val"] for r in rows) == 100.0
+        js = join_strategies(out)
+        assert "SortMergeJoin" not in js, js
+        scans = len(re.findall(r"Range \(0, 200,", _physical(out)))
+        assert scans == 1, f"edge table scanned {scans}x:\n{_physical(out)}"
+        assert count_exchanges(out) <= 3, count_exchanges(out)
+
+
 def test_domain_edges_plan_single_aggregate_no_join(spark):
     """The domain rollup must be a pure projection + one hash aggregate
     over the pair table — no join, no window, no cartesian."""
@@ -246,7 +275,7 @@ def test_cc_hook_step_single_edge_scan(spark):
     ).persist()
     e.count()
     parent = spark.range(4).select("id", F.col("id").alias("val"))
-    hooked = _hook_step(e, parent, scatter_hook=True)
+    hooked = _hook_step(e, parent)
     plan = _physical(hooked)
     scans = len(re.findall(r"InMemoryTableScan", plan))
     assert scans == 1, f"edge table scanned {scans}x per superstep:\n{plan}"

@@ -12,7 +12,7 @@ import os
 
 import pytest
 
-from graphblast_spark.algorithms import connected_components, pagerank
+from graphblast_spark.algorithms import connected_components, pagerank, personalized_pagerank
 from graphblast_spark.descriptor import DEFAULT_DESC
 from graphblast_spark.runtime.superstep import SuperstepRunner
 from graphblast_spark.sources.mtx import fixture_graph
@@ -40,6 +40,26 @@ def test_pagerank_checkpoint_resume_equivalence(spark, tmp_path):
     meta = r2.latest_checkpoint()
     assert meta["iter"] == 5  # iters 0..5 done, ckpt at (it+1)%2==0 → it=5
     resumed = _ranks(pagerank(g, fixed_iters=10, runner=r2))
+
+    assert set(resumed) == set(full)
+    for k in full:
+        assert resumed[k] == pytest.approx(full[k], abs=1e-15)
+    g.unpersist()
+
+
+def test_personalized_pagerank_checkpoint_resume_equivalence(spark, tmp_path):
+    """PPR runs pagerank's superstep loop, so it resumes from durable
+    checkpoints the same way."""
+    g = fixture_graph(spark, "chesapeake")
+    run_dir = str(tmp_path / "ppr_run")
+    seeds = [0, 2]
+    full = _ranks(personalized_pagerank(g, seeds, fixed_iters=6))
+
+    r1 = SuperstepRunner(spark, run_dir=run_dir, checkpoint_every=2, name="ppr")
+    _ranks(personalized_pagerank(g, seeds, fixed_iters=4, runner=r1))
+    r2 = SuperstepRunner(spark, run_dir=run_dir, checkpoint_every=2, name="ppr")
+    assert r2.latest_checkpoint()["iter"] == 3
+    resumed = _ranks(personalized_pagerank(g, seeds, fixed_iters=6, runner=r2))
 
     assert set(resumed) == set(full)
     for k in full:
